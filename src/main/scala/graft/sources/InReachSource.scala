@@ -6,16 +6,18 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
+import java.time.{Duration, Instant, ZoneOffset}
 import java.util.Base64
 import scala.util.{Failure, Success, Try}
 
 /** The inReach HTTP/KML source (SURVEY.md §2.1 S1–S8).
   *
   * Shape: the (tiny, driver-known) share list is parallelized one
-  * share per partition — the reference's I/O-parallel fan-out +
-  * `Promise.all` barrier (`task.ts:66-68,177`) becomes a stage of
-  * parallel Spark tasks with the barrier at the next shuffle.
+  * share per partition, so each scan task fetches and parses exactly
+  * one share and the scan needs no shuffle of its own — the
+  * reference's I/O-parallel fan-out + `Promise.all` barrier
+  * (`task.ts:66-68,177`) becomes a stage of parallel Spark tasks with
+  * the barrier at the next shuffle.
   *
   * The 30-minute lookback (`task.ts:80-82`) is a source-level
   * predicate pushdown: it ships to the server as the `d1` query param
@@ -50,13 +52,28 @@ object InReachSource {
   def basicAuth(password: String): String =
     "Basic " + Base64.getEncoder.encodeToString((":" + password).getBytes("UTF-8"))
 
-  /** Production fetcher (java.net.http). Defined as a static method so
-    * the closure that captures it stays serializable. */
+  /** Bounds on one feed request: a hung server fails its share, not
+    * the run. */
+  private val ConnectTimeout: Duration = Duration.ofSeconds(10)
+  private val RequestTimeout: Duration = Duration.ofSeconds(60)
+
+  // One client for every request: each HttpClient owns a selector
+  // thread and a connection pool. Lazy, so it is built on first use in
+  // each executor JVM and never serialized.
+  private lazy val client: HttpClient =
+    HttpClient.newBuilder().connectTimeout(ConnectTimeout).build()
+
+  /** Production fetcher (java.net.http). A non-2xx status (e.g. a 401
+    * on a bad password, a 500) throws, so the share fails and the
+    * error body never reaches the KML parser. Defined as a static
+    * method so the closure that captures it stays serializable. */
   val httpFetcher: Fetcher = (url: String, password: Option[String]) => {
-    val client = HttpClient.newHttpClient()
-    val builder = HttpRequest.newBuilder(URI.create(url)).GET()
+    val builder = HttpRequest.newBuilder(URI.create(url)).timeout(RequestTimeout).GET()
     password.foreach(p => builder.header("Authorization", basicAuth(p)))
-    client.send(builder.build(), HttpResponse.BodyHandlers.ofString()).body()
+    val response = client.send(builder.build(), HttpResponse.BodyHandlers.ofString())
+    if (response.statusCode / 100 != 2)
+      throw new RuntimeException(s"HTTP ${response.statusCode}")
+    response.body()
   }
 
   /** shares → raw placemark rows. One share per partition; per-share
@@ -74,9 +91,9 @@ object InReachSource {
       lookbackMinutes: Long = 30,
       debug: Boolean = false): Dataset[RawPlacemark] = {
     import spark.implicits._
-    val seed = spark.createDataset(shares)
-      .repartition(math.max(shares.size, 1))
-    seed.flatMap { share =>
+    // parallelize slices a Seq evenly: n slices of n shares hold one each
+    val seed = spark.sparkContext.parallelize(shares, math.max(shares.size, 1))
+    spark.createDataset(seed.flatMap { share =>
       val shareId = normalizeShareId(share.ShareId)
       val callSign = share.CallSign.getOrElse(shareId) // task.ts:75
       Try {
@@ -91,6 +108,6 @@ object InReachSource {
           System.err.println(s"FEED: $callSign: $err") // task.ts:166
           Seq.empty[RawPlacemark]
       }
-    }
+    })
   }
 }

@@ -4,6 +4,9 @@ import graft.model.{EngineConfig, Share}
 import graft.operators.FeatureProjection
 import graft.sinks.FeatureCollectionSink
 import graft.sources.InReachSource
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
@@ -44,10 +47,14 @@ object PipelineFixtures extends Serializable {
       placemark("222", "2026-08-12T05:05:00Z")),
     "beta" -> doc(placemark("333", "2026-08-12T05:20:00Z")))
 
-  val fetcher: InReachSource.Fetcher = (url, _) => {
-    val shareId = url.split("/Feed/Share/")(1).split("\\?")(0)
-    feeds(shareId)
-  }
+  /** The share id of a feed URL built by `InReachSource.feedUrl`. */
+  def shareIdOf(url: String): String = url.split("/Feed/Share/")(1).split("\\?")(0)
+
+  val fetcher: InReachSource.Fetcher = (url, _) => feeds(shareIdOf(url))
+
+  /** Serves any share: one placemark whose IMEI is the share id. */
+  val perShareFetcher: InReachSource.Fetcher = (url, _) =>
+    doc(placemark(shareIdOf(url), "2026-08-12T05:00:00Z"))
 
   val brokenFetcher: InReachSource.Fetcher = (url, pw) =>
     if (url.contains("alpha")) throw new RuntimeException("HTTP 500")
@@ -60,7 +67,7 @@ object PipelineFixtures extends Serializable {
   val now = Instant.parse("2026-08-12T05:30:00Z")
 }
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import PipelineFixtures._
 
   test("end-to-end: three deduped features, later fix wins") {
@@ -119,5 +126,19 @@ class PipelineSpec extends SparkSpec {
     val f: InReachSource.Fetcher = (_, _) => noPoint
     val out = Pipeline.features(spark, EngineConfig(Seq(Share("s"))), f, now)
     assert(out.select("id").collect().map(_.getString(0)).toSeq == Seq("inreach-444"))
+  }
+
+  test("scan shape: one share per task, and the dedup's shuffle is the only Exchange") {
+    val shares = (1 to 11).map(i => Share(s"s$i"))
+    val raw = InReachSource.read(spark, shares, perShareFetcher, now)
+    assert(raw.rdd.getNumPartitions == shares.size)
+    val perPartition = raw.rdd.mapPartitions(it => Iterator(it.map(_.shareId).toSet)).collect()
+    assert(perPartition.toSeq == shares.map(s => Set(s.ShareId)))
+
+    val plan = Pipeline.features(spark, EngineConfig(shares), perShareFetcher, now)
+      .queryExecution.executedPlan
+    val partitionings = collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(partitionings.size == 1 && partitionings.head.isInstanceOf[HashPartitioning], plan)
+    assert(!plan.toString.contains("RoundRobinPartitioning"), plan)
   }
 }
